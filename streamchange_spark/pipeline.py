@@ -19,6 +19,7 @@ nothing else changes. Partitioning strategy:
 from __future__ import annotations
 
 import time
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,7 +33,6 @@ from .operators import (
     kmv_rollup,
     kmv_tier,
     merge_tier,
-    rollup_all_tiers,
     rollup_raw,
     sketch_percentiles,
     sketch_rollup,
@@ -65,13 +65,186 @@ def default_detector_factory():
 #: ~ 1/sqrt(k)); the sig/{day} tier stores k+2 small columns per snapshot.
 SIG_HASHES = 16
 
+#: Points per Gorilla blob. Bounds the skew tail at scale: a hot url whose
+#: 1h series runs to millions of points would otherwise become one giant
+#: blob (single sequential decode stream, one fat task); 64k-point chunks
+#: decode at full lockstep width and re-compress independently under
+#: retention rewrites. The raw operator keeps chunking opt-in; the pipeline
+#: always chunks.
+GORILLA_CHUNK_POINTS = 65536
+
+#: Manifest column stats (each family records whichever of these it
+#: carries): a url- or time-range read over the committed tiers then opens
+#: only the overlapping files (files_for).
+STAT_COLS = ["url", "bucket_start", "warc_ts", "run_start_us"]
+
+
+class TierFamily(NamedTuple):
+    """One committed tier family, stored as ``{name}/{day}`` partitions.
+
+    ``build(day_metrics, day_pages, built)`` makes one day's partition from
+    that day's metric rows and pages; ``built`` maps the names of the
+    families before it in :data:`TIER_FAMILIES` to their partitions for the
+    same day. Every family is a per-slice build plus an associative merge,
+    so merge(tier(base), tier(late)) == tier(base ∪ late): ``rollup``
+    merges a union of same-tier partitions into one, and is None when the
+    union itself is the merge. A family with ``mergeable=False`` is derived
+    from ``built`` and is rebuilt from the merged families instead.
+    ``url_keyed`` families carry the url on every row, so
+    :func:`purge_url` deletes from them by url; the others are rebuilt."""
+
+    name: str
+    build: Callable[[DataFrame, DataFrame, dict], DataFrame]
+    rollup: Callable[[DataFrame], DataFrame] | None
+    mergeable: bool = True
+    url_keyed: bool = True
+
+    @property
+    def prefix(self) -> str:
+        return f"{self.name}/"
+
+
+#: Every tier family the pipeline commits per day, in build order.
+TIER_FAMILIES = (
+    # The additive 1h tier: associative state, so merge_tier of committed
+    # and late partials equals a direct build over their union.
+    TierFamily(
+        "tier1h",
+        lambda m, p, built: rollup_raw(m, ["url"], "warc_ts", "text_len", "1h"),
+        lambda df: merge_tier([df], ["url"]),
+    ),
+    # Gorilla blobs are day-local by layout: re-compressed from the day's
+    # (merged) 1h tier, never merged blob-wise.
+    TierFamily(
+        "gorilla1h",
+        lambda m, p, built: compress_series(
+            built["tier1h"], ["url"], "bucket_start", "sum_v",
+            chunk_points=GORILLA_CHUNK_POINTS,
+        ),
+        None,
+        mergeable=False,
+    ),
+    # Mergeable percentile sketches ride the same raw scan: coarser
+    # percentile tiers merge FROM the 1h blobs (sketch_rollup) instead of
+    # re-scanning raw. The GK merge keeps its carried error bound.
+    TierFamily(
+        "qsketch1h",
+        lambda m, p, built: sketch_tier(m, ["url"], "warc_ts", "text_len", tier="1h"),
+        lambda df: sketch_rollup(df, ["url"], "1h"),
+    ),
+    # Crawl breadth: unique urls per hour as a bottom-k (KMV) sketch. The
+    # 1d/30d distinct-url tiers merge FROM these arrays bit-exactly
+    # (bottom-k is closed under union). Keyless: one sketch holds every url,
+    # so a purge rebuilds it instead of deleting rows.
+    TierFamily(
+        "kmv1h",
+        lambda m, p, built: kmv_tier(m, [], "warc_ts", "url", tier="1h"),
+        lambda df: kmv_rollup(df, [], "1h"),
+        url_keyed=False,
+    ),
+    # Regression moments: per-(url, 1h) partial sums, closed under
+    # addition. Re-bucketing at the same tier is a pure per-(url, bucket)
+    # SUM (origin shift c = 0); the 1d/30d text-length TREND merges from
+    # these (statsagg.py).
+    TierFamily(
+        "stats1h",
+        lambda m, p, built: stats_tier(m, ["url"], "warc_ts", "text_len", tier="1h"),
+        lambda df: stats_rollup(df, ["url"], "1h"),
+    ),
+    # Time-in-state runs (stateagg.py): each crawl's lang held LOCF until
+    # the url's next crawl. Stored per-OBSERVATION (collapse=False) so the
+    # read-time span stitch, which crosses day boundaries the per-day scan
+    # cannot see, stays exact under arbitrary late/out-of-order refresh
+    # batches: the union of run rows IS the refresh.
+    TierFamily(
+        "staterun",
+        lambda m, p, built: encode_state_runs(
+            p, ["url"], "warc_ts", "lang", collapse=False
+        ),
+        None,
+    ),
+    # Change-score signatures depend only on each snapshot's own text, so
+    # the per-day partials concatenate into the table a global pass would
+    # give, and the cross-day score window reads k+2 small columns per
+    # snapshot, never text again. xxhash is the scale default (as in the
+    # corpus stage): md5 exists for cross-engine oracle reproducibility, but
+    # its 16 JVM digests per shingle made the pass 3.4-4.5x slower at every
+    # parallelism level (BASELINE.md churn rows). Change scores only compare
+    # signature equality, so the hash choice is statistically neutral.
+    TierFamily(
+        "sig",
+        lambda m, p, built: snapshot_signatures(
+            p, "url", "warc_ts", "text", num_hashes=SIG_HASHES, hash_fn="xxhash"
+        ),
+        None,
+    ),
+)
+
+
+def _days(df: DataFrame) -> list[str]:
+    """The distinct ``warc_ts`` days of ``df``, sorted."""
+    return sorted(
+        str(r["day"])
+        for r in df.select(F.to_date("warc_ts").alias("day")).distinct().collect()
+    )
+
+
+def _on_day(df: DataFrame, day: str) -> DataFrame:
+    return df.where(F.to_date("warc_ts") == F.lit(day))
+
+
+def _build_day(
+    metrics: DataFrame,
+    pages: DataFrame,
+    day: str,
+    committed: Callable[[str], DataFrame] | None = None,
+) -> dict[str, DataFrame]:
+    """Every family's partition for ``day``, keyed ``{name}/{day}``. With
+    ``committed`` (partition key -> that committed partition), a mergeable
+    family unions the committed rows BEFORE the new partial and merges:
+    old-first adds the float sums in the order a full rebuild does, so the
+    refreshed tier is bit-identical to it."""
+    day_metrics, day_pages = _on_day(metrics, day), _on_day(pages, day)
+    built: dict[str, DataFrame] = {}
+    for fam in TIER_FAMILIES:
+        df = fam.build(day_metrics, day_pages, built)
+        if committed is not None and fam.mergeable:
+            df = committed(f"{fam.name}/{day}").unionByName(df)
+            if fam.rollup is not None:
+                df = fam.rollup(df)
+        built[fam.name] = df
+    return {f"{name}/{day}": df for name, df in built.items()}
+
+
+def _changepoints(
+    series: DataFrame, detector_factory, ts_col="bucket_start", value_col="v"
+) -> DataFrame:
+    """Per-url change points of one metric series. standardize=True: the
+    detectors' score/penalty calibration assumes ~unit-variance input (the
+    reference's own examples feed unit-variance simulate() data); raw hourly
+    text_len means are in the hundreds and would alarm on pure noise, and a
+    raw [0,1] change-score series could NEVER clear the default BIC penalty
+    at max_window=100 (max squared-CUSUM 25 < 36.8). Per-key z-scoring
+    happens inside the grouped UDF after the ts sort — deterministic, no
+    extra exchange; constant series z-score to NaN and are dropped by the
+    detectors' reference NaN semantics."""
+    return window_segmentor_changepoints(
+        series, detector_factory, key_cols=["url"], ts_col=ts_col,
+        value_cols=[value_col], standardize=True,
+    )
+
+
+def _hourly_mean(tier1h: DataFrame) -> DataFrame:
+    return tier1h.select(
+        "url", "bucket_start", (F.col("sum_v") / F.col("n_points")).alias("v")
+    )
+
 
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     store_dir: str,
     detector_factory=default_detector_factory,
-    chunk_points: int | None = 65536,
 ) -> dict:
     """Run all stages, committing each day's tier data as snapshot partitions.
     Returns run metrics. Re-running over the same store resumes: completed
@@ -79,88 +252,21 @@ def run_pipeline(
     store = SnapshotStore(store_dir)
     metrics = extract_metrics(pages)
 
-    days = [
-        str(r["day"])
-        for r in metrics.select(F.to_date("warc_ts").alias("day")).distinct().collect()
-    ]
+    days = _days(metrics)
     done = store.completed_partitions()
-    todo = sorted(d for d in days if f"tier1h/{d}" not in done)
+    todo = [d for d in days if f"tier1h/{d}" not in done]
 
     t0 = time.time()
     committed = None
     if todo:
         partitions = {}
         for day in todo:
-            day_metrics = metrics.where(F.to_date("warc_ts") == F.lit(day))
-            tiers = rollup_all_tiers(day_metrics, ["url"], "warc_ts", "text_len")
-            partitions[f"tier1h/{day}"] = tiers["1h"]
-            # chunk_points bounds the skew tail at scale: a hot url whose 1h
-            # series runs to millions of points would otherwise become one
-            # giant blob (single sequential decode stream, one fat task);
-            # 64k-point chunks decode at full lockstep width and re-compress
-            # independently under retention rewrites. The raw operator keeps
-            # chunking opt-in; the pipeline defaults it ON.
-            partitions[f"gorilla1h/{day}"] = compress_series(
-                tiers["1h"], ["url"], "bucket_start", "sum_v",
-                chunk_points=chunk_points,
-            )
-            # Mergeable percentile sketches ride the same raw scan: the 1h
-            # blobs commit next to the additive tier, and coarser
-            # percentile tiers merge FROM them (sketch_rollup) instead of
-            # re-scanning raw — the percentile analogue of the
-            # continuous-aggregate contract.
-            partitions[f"qsketch1h/{day}"] = sketch_tier(
-                day_metrics, ["url"], "warc_ts", "text_len", tier="1h"
-            )
-            # Crawl breadth rides along too: unique urls per hour as a
-            # bottom-k (KMV) sketch — the day's 1d/30d distinct-url tiers
-            # merge FROM these persisted arrays bit-exactly (bottom-k is
-            # closed under union), never re-scanning the day's pages.
-            partitions[f"kmv1h/{day}"] = kmv_tier(
-                day_metrics, [], "warc_ts", "url", tier="1h"
-            )
-            # Regression moments ride the same raw scan: per-(url, 1h)
-            # partial sums, closed under addition — the 1d/30d TREND of a
-            # page's text length (is it drifting between change points?)
-            # merges from these, never re-scanning raw (statsagg.py).
-            partitions[f"stats1h/{day}"] = stats_tier(
-                day_metrics, ["url"], "warc_ts", "text_len", tier="1h"
-            )
-            # The change-score TEXT PASS is also per-day incremental:
-            # signatures depend only on each snapshot's own text, so the
-            # per-day partials concatenate into the same table a global
-            # pass would give; the cross-day score window later reads k+2
-            # small columns per snapshot, never text again.
-            day_pages = pages.where(F.to_date("warc_ts") == F.lit(day))
-            # Time-in-state runs (stateagg.py): each crawl's lang held LOCF
-            # until the url's next crawl. Stored per-OBSERVATION
-            # (collapse=False) so the read-time span stitch — which crosses
-            # day boundaries the per-day scan cannot see — stays exact
-            # under arbitrary late/out-of-order refresh batches; the
-            # queryable per-day/monthly lang-duration tier stitches from
-            # these 3-small-column rows, never re-reading text.
-            partitions[f"staterun/{day}"] = encode_state_runs(
-                day_pages, ["url"], "warc_ts", "lang", collapse=False
-            )
-            partitions[f"sig/{day}"] = snapshot_signatures(
-                day_pages, "url", "warc_ts", "text", num_hashes=SIG_HASHES,
-                # xxhash = the scale default (same convention as the corpus
-                # stage): the md5 default exists for cross-engine oracle
-                # reproducibility, but its 16 JVM digests per shingle made
-                # the signature pass 3.4-4.5x slower than xxhash64 at every
-                # parallelism level (BASELINE.md churn rows). Change-score
-                # semantics only compare signature equality, so the hash
-                # choice is statistically neutral.
-                hash_fn="xxhash",
-            )
+            partitions.update(_build_day(metrics, pages, day))
         committed = store.commit_partitions(
             partitions,
             watermark=max(todo),
             properties={"stage": "tiers"},
-            # Manifest column stats (each family records whichever of these
-            # it carries): a url- or time-range read over the committed
-            # tiers then opens only the overlapping files (files_for).
-            stat_cols=["url", "bucket_start", "warc_ts", "run_start_us"],
+            stat_cols=STAT_COLS,
         )
     tiers_sec = time.time() - t0
 
@@ -169,23 +275,7 @@ def run_pipeline(
     tier1h = store.read(spark, prefix="tier1h/")
 
     t0 = time.time()
-    hourly_mean = tier1h.select(
-        "url", "bucket_start", (F.col("sum_v") / F.col("n_points")).alias("v")
-    )
-    # standardize=True: the detectors' score/penalty calibration assumes
-    # ~unit-variance input (the reference's own examples feed unit-variance
-    # simulate() data); raw hourly text_len means are in the hundreds, which
-    # would alarm on pure noise. Per-key z-scoring happens inside the
-    # grouped UDF after the ts sort — deterministic, no extra exchange.
-    cpts = window_segmentor_changepoints(
-        hourly_mean,
-        detector_factory,
-        key_cols=["url"],
-        ts_col="bucket_start",
-        value_cols=["v"],
-        standardize=True,
-    )
-    n_cpts = cpts.count()
+    n_cpts = _changepoints(_hourly_mean(tier1h), detector_factory).count()
     detect_sec = time.time() - t0
 
     # Crawl-FREQUENCY change points — the north star's remaining per-URL
@@ -194,9 +284,7 @@ def run_pipeline(
     # is free once tier1h exists — but a frequency DROP shows up as
     # MISSING hours, not smaller counts, so the series must be densified
     # first: gapfill(method="null") builds the per-url hourly grid and
-    # absent hours coalesce to 0 crawls. standardize=True for the same
-    # penalty-calibration reason as the stages above (counts are small
-    # integers; constant-rate urls z-score to NaN and drop).
+    # absent hours coalesce to 0 crawls.
     t0 = time.time()
     hourly_freq = gapfill(
         tier1h.select("url", "bucket_start", "n_points"),
@@ -207,14 +295,7 @@ def run_pipeline(
         "bucket_start",
         F.coalesce(F.col("n_points"), F.lit(0)).cast("double").alias("v"),
     )
-    freq_cpts = window_segmentor_changepoints(
-        hourly_freq,
-        detector_factory,
-        key_cols=["url"],
-        ts_col="bucket_start",
-        value_cols=["v"],
-        standardize=True,
-    ).count()
+    freq_cpts = _changepoints(hourly_freq, detector_factory).count()
     freq_sec = time.time() - t0
 
     # 1d percentiles merged from the committed 1h sketches — no raw re-scan
@@ -255,19 +336,11 @@ def run_pipeline(
     churn = change_scores_from_signatures(
         sigs, "url", "warc_ts", num_hashes=SIG_HASHES
     )
-    # standardize=True for the same reason as the text_len stage above —
-    # and more acutely: a raw [0,1] change-score series can NEVER clear the
-    # default BIC penalty at max_window=100 (max squared-CUSUM 25 < 36.8),
-    # so without it this stage is structurally unable to fire. Constant
-    # (all-zero churn) urls z-score to NaN and are dropped by the
-    # detectors' reference NaN semantics.
-    churn_cpts = window_segmentor_changepoints(
+    churn_cpts = _changepoints(
         churn.where(F.col("change_score").isNotNull()),
         detector_factory,
-        key_cols=["url"],
-        ts_col="warc_ts",
-        value_cols=["change_score"],
-        standardize=True,
+        "warc_ts",
+        "change_score",
     ).count()
     churn_sec = time.time() - t0
 
@@ -351,11 +424,10 @@ def purge_url(
     url from the raw pages alone leaves its rolled-up points, Gorilla
     blobs, percentile sketches, and minhash signatures queryable.
 
-    Row-keyed families (``tier1h/``, ``gorilla1h/``, ``qsketch1h/``,
-    ``stats1h/``, ``staterun/``, ``sig/`` — every row carries the url,
-    blobs and sketches are per-url)
-    purge with ONE :meth:`SnapshotStore.delete_where` each, url-range hint
-    pruning the probe to the files whose stats cover the url;
+    The url-keyed families of :data:`TIER_FAMILIES` (every row carries the
+    url; blobs and sketches are per-url) purge with ONE
+    :meth:`SnapshotStore.delete_where` each, url-range hint pruning the
+    probe to the files whose stats cover the url;
     ``mode="merge-on-read"`` (default) makes each a metadata-only commit
     (the compliance sweep writes KBs, the nightly ``maintain()`` pays the
     rewrite).
@@ -371,62 +443,59 @@ def purge_url(
     is NOT complete until they do. Returns per-family deleted-row counts
     and snapshot ids."""
     report: dict = {"url": url, "families": {}}
-    for fam in (
-        "tier1h/", "gorilla1h/", "qsketch1h/", "stats1h/", "staterun/", "sig/"
-    ):
+    for fam in TIER_FAMILIES:
+        if not fam.url_keyed:
+            continue
         snap, rep = store.delete_where(
             spark,
             F.col("url") == F.lit(url),
-            prefix=fam,
+            prefix=fam.prefix,
             ranges={"url": (url, url)},
             mode=mode,
             properties={"stage": "purge", "url": url},
         )
-        report["families"][fam] = {
+        report["families"][fam.prefix] = {
             "snapshot_id": snap,
             "deleted_rows": rep["deleted_rows"],
             "pruned_files": rep["pruned_files"],
         }
+    keyless = [fam for fam in TIER_FAMILIES if not fam.url_keyed]
     m = store.manifest() or {"files": {}}
-    kmv_days = sorted(
-        k.split("/", 1)[1] for k in m["files"] if k.startswith("kmv1h/")
-    )
+    kmv_days = sorted({
+        k.split("/", 1)[1]
+        for k in m["files"]
+        for fam in keyless
+        if k.startswith(fam.prefix)
+    })
     if pages is None:
         report["kmv_skipped_days"] = kmv_days
         return report
-    purged = extract_metrics(pages.where(F.col("url") != F.lit(url)))
+    purged_pages = pages.where(F.col("url") != F.lit(url))
+    purged = extract_metrics(purged_pages)
     # Rebuild ONLY the days the supplied source covers: a caller holding
     # just the newest crawl batch must not overwrite older days' sketches
     # with empty ones. Days the source lacks stay outstanding and are
     # reported for a later purge call that has them.
     # coverage comes from the UNFILTERED source (a day whose every row was
     # the victim's still counts as covered — its rebuilt sketch is empty)
-    src_days = {
-        str(r["day"])
-        for r in pages.select(F.to_date("warc_ts").alias("day"))
-        .distinct()
-        .collect()
-    }
+    src_days = set(_days(pages))
     outstanding = [d for d in kmv_days if d not in src_days]
     if outstanding:
         report["kmv_skipped_days"] = outstanding
     partitions = {
-        f"kmv1h/{day}": kmv_tier(
-            purged.where(F.to_date("warc_ts") == F.lit(day)),
-            [],
-            "warc_ts",
-            "url",
-            tier="1h",
+        f"{fam.name}/{day}": fam.build(
+            _on_day(purged, day), _on_day(purged_pages, day), {}
         )
         for day in kmv_days
         if day in src_days
+        for fam in keyless
     }
     if partitions:
         report["kmv_rebuild_snapshot"] = store.commit_partitions(
             partitions,
             watermark=(m.get("watermark")),
             properties={"stage": "purge-kmv-rebuild", "url": url},
-            stat_cols=["bucket_start"],
+            stat_cols=STAT_COLS,
         )
         report["kmv_rebuilt_days"] = [d for d in kmv_days if d in src_days]
     return report
@@ -480,7 +549,6 @@ def refresh_pipeline(
     late_pages: DataFrame,
     store_dir: str,
     detector_factory=default_detector_factory,
-    chunk_points: int | None = 65536,
 ) -> dict:
     """Late-data invalidation + incremental refresh — the continuous-aggregate
     property ``run_pipeline`` alone doesn't give: its resume skips COMPLETED
@@ -521,81 +589,20 @@ def refresh_pipeline(
     """
     store = SnapshotStore(store_dir)
     if store.head() is None:
-        return run_pipeline(
-            spark, late_pages, store_dir, detector_factory, chunk_points
-        )
+        return run_pipeline(spark, late_pages, store_dir, detector_factory)
     done = store.completed_partitions()
     late_metrics = extract_metrics(late_pages)
-    days = sorted(
-        str(r["day"])
-        for r in late_metrics.select(F.to_date("warc_ts").alias("day"))
-        .distinct()
-        .collect()
-    )
+    days = _days(late_metrics)
 
     t0 = time.time()
     partitions: dict[str, DataFrame] = {}
     merged_days = []
     for day in days:
-        day_metrics = late_metrics.where(F.to_date("warc_ts") == F.lit(day))
-        day_pages = late_pages.where(F.to_date("warc_ts") == F.lit(day))
-        tier_1h = rollup_raw(day_metrics, ["url"], "warc_ts", "text_len", "1h")
-        sketch_1h = sketch_tier(
-            day_metrics, ["url"], "warc_ts", "text_len", tier="1h"
-        )
-        kmv_1h = kmv_tier(day_metrics, [], "warc_ts", "url", tier="1h")
-        stats_1h = stats_tier(
-            day_metrics, ["url"], "warc_ts", "text_len", tier="1h"
-        )
-        staterun = encode_state_runs(
-            day_pages, ["url"], "warc_ts", "lang", collapse=False
-        )
-        sig = snapshot_signatures(
-            day_pages, "url", "warc_ts", "text",
-            num_hashes=SIG_HASHES, hash_fn="xxhash",
-        )
+        committed = None
         if f"tier1h/{day}" in done:
             merged_days.append(day)
-            tier_1h = merge_tier(
-                [store.read(spark, prefix=f"tier1h/{day}"), tier_1h], ["url"]
-            )
-            sketch_1h = sketch_rollup(
-                store.read(spark, prefix=f"qsketch1h/{day}").unionByName(
-                    sketch_1h
-                ),
-                ["url"],
-                "1h",
-            )
-            kmv_1h = kmv_rollup(
-                store.read(spark, prefix=f"kmv1h/{day}").unionByName(kmv_1h),
-                [],
-                "1h",
-            )
-            sig = store.read(spark, prefix=f"sig/{day}").unionByName(sig)
-            # per-observation run rows: union IS the refresh (the stitch
-            # interleaves them by timestamp at read — exact under
-            # arbitrary lateness, the reason collapse=False here)
-            staterun = store.read(spark, prefix=f"staterun/{day}").unionByName(
-                staterun
-            )
-            # regression moments are additive: re-bucketing at the same
-            # tier is a pure per-(url, bucket) SUM (origin shift c = 0)
-            stats_1h = stats_rollup(
-                store.read(spark, prefix=f"stats1h/{day}").unionByName(
-                    stats_1h
-                ),
-                ["url"],
-                "1h",
-            )
-        partitions[f"tier1h/{day}"] = tier_1h
-        partitions[f"gorilla1h/{day}"] = compress_series(
-            tier_1h, ["url"], "bucket_start", "sum_v", chunk_points=chunk_points
-        )
-        partitions[f"qsketch1h/{day}"] = sketch_1h
-        partitions[f"kmv1h/{day}"] = kmv_1h
-        partitions[f"stats1h/{day}"] = stats_1h
-        partitions[f"staterun/{day}"] = staterun
-        partitions[f"sig/{day}"] = sig
+            committed = lambda key: store.read(spark, prefix=key)
+        partitions.update(_build_day(late_metrics, late_pages, day, committed))
 
     prior_watermark = store.manifest().get("watermark")
     watermark = max([*days, prior_watermark] if prior_watermark else days)
@@ -609,7 +616,7 @@ def refresh_pipeline(
             "merged_days": merged_days,
             "late_rows": n_late,
         },
-        stat_cols=["url", "bucket_start", "warc_ts", "run_start_us"],
+        stat_cols=STAT_COLS,
     )
     refresh_sec = time.time() - t0
 
@@ -617,21 +624,8 @@ def refresh_pipeline(
     t0 = time.time()
     tier1h = store.read(spark, prefix="tier1h/")
     late_urls = late_metrics.select("url").distinct()
-    hourly_mean = (
-        tier1h.join(late_urls, "url", "left_semi")
-        .select(
-            "url",
-            "bucket_start",
-            (F.col("sum_v") / F.col("n_points")).alias("v"),
-        )
-    )
-    n_cpts = window_segmentor_changepoints(
-        hourly_mean,
-        detector_factory,
-        key_cols=["url"],
-        ts_col="bucket_start",
-        value_cols=["v"],
-        standardize=True,
+    n_cpts = _changepoints(
+        _hourly_mean(tier1h.join(late_urls, "url", "left_semi")), detector_factory
     ).count()
     detect_sec = time.time() - t0
 

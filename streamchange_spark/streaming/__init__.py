@@ -1,6 +1,7 @@
 """Structured Streaming variants: stateful detectors, watermarked
-continuous aggregates, and incremental corpus ingestion (see
-streaming.detectors, streaming.rollup, streaming.corpus)."""
+continuous aggregates, effectively-once tier ingests, and incremental
+corpus ingestion (see streaming.detectors, streaming.rollup,
+streaming.partials, streaming.corpus)."""
 
 from .corpus import (
     corpus_verdicts_from_ingest,
@@ -16,16 +17,21 @@ from .detectors import (
     streaming_sequential_detector,
     streaming_window_segmentor,
 )
-from .changescore import change_scores_from_ingest, run_streaming_signature_ingest
-from .heavy_hitters import hh_tier_from_ingest, run_streaming_hh_ingest
-from .kmv import kmv_tier_from_ingest, run_streaming_kmv_ingest
-from .statsagg import run_streaming_stats_ingest, stats_tier_from_ingest
-from .stateagg import (
+from .partials import (
+    change_scores_from_ingest,
+    hh_tier_from_ingest,
+    kmv_tier_from_ingest,
+    run_streaming_hh_ingest,
+    run_streaming_kmv_ingest,
+    run_streaming_signature_ingest,
+    run_streaming_sketch_ingest,
     run_streaming_state_ingest,
+    run_streaming_stats_ingest,
+    sketch_tier_from_ingest,
     state_tier_from_ingest,
+    stats_tier_from_ingest,
     uptime_tier_from_ingest,
 )
-from .qsketch import run_streaming_sketch_ingest, sketch_tier_from_ingest
 from .rollup import streaming_rollup_raw
 from .upsert import run_streaming_upsert
 from .sessions import streaming_sessions

@@ -8,13 +8,10 @@ exactly the checkpointed "which files are done" bookkeeping the batch
 corpus pipeline gets from SnapshotStore, so this module is the streaming
 twin of ``corpus_pipeline.run_corpus_pipeline``:
 
-- :func:`run_streaming_corpus_ingest` — ``readStream`` over the dump
-  directory, ``corpus_features`` per micro-batch via ``foreachBatch`` (the
-  feature pass is row-local, so the union of micro-batch outputs is
-  bit-identical to one batch run), features written to parquet partitioned
-  by ``_batch_id`` with dynamic-partition overwrite: a replayed batch
-  rewrites ONLY its own partition, upgrading foreachBatch's at-least-once
-  to effectively-once.
+- :func:`run_streaming_corpus_ingest` — ``corpus_features`` per
+  micro-batch of the dump directory (the feature pass is row-local, so the
+  union of micro-batch outputs is bit-identical to one batch run), written
+  as effectively-once partials by the shared ``streaming.partials`` ingest.
 - :func:`corpus_verdicts_from_ingest` — ``verdicts_from_features`` over the
   accumulated feature table. Dedup (exact groupBy + LSH band keys) depends
   only on per-document values, never on batch boundaries, so verdicts are
@@ -39,6 +36,7 @@ from ..operators.corpus import (
     corpus_increment_deltas,
     verdicts_from_features,
 )
+from .partials import _ingest, read_partials, write_partial
 
 __all__ = [
     "corpus_verdicts_from_ingest",
@@ -90,30 +88,27 @@ def run_streaming_corpus_ingest(
     own ``_batch_id`` partition instead of appending duplicates. ``schema``
     is the file schema DDL (streaming file sources require it explicitly).
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        feats = corpus_features(
-            batch_df, id_col=id_col, text_col=text_col, **feature_kw
-        )
-        (
-            feats.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(features_path)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    _ingest(
+        spark, input_path, checkpoint_path, schema,
+        lambda df, batch_id: write_partial(
+            corpus_features(df, id_col=id_col, text_col=text_col, **feature_kw),
+            features_path, batch_id,
+        ),
+        max_files_per_trigger, timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
+
+
+def _prior_partials(
+    spark: SparkSession, path: str, before_batch: int, ddl: str
+) -> DataFrame:
+    """State deltas that batches before ``before_batch`` wrote under
+    ``path``; an empty ``ddl`` frame before the first batch wrote any."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return read_partials(spark, path, before_batch)
+    except AnalysisException:
+        return spark.createDataFrame([], ddl)
 
 
 def _read_state(
@@ -121,31 +116,20 @@ def _read_state(
 ) -> tuple[DataFrame, DataFrame]:
     """Merge-on-read recovery of the dedup state from delta partitions with
     ``_batch_id < before_batch`` (both folds are associative, so any prefix
-    of deltas reproduces the sequential index exactly). Missing paths mean
-    no prior state (first batch)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        md5 = (
-            spark.read.parquet(f"{state_path}/md5")
-            .where(F.col("_batch_id") < before_batch)
-            .select("text_md5")
-            .distinct()
-        )
-    except AnalysisException:
-        md5 = spark.createDataFrame([], "text_md5 string")
-    try:
-        sig = (
-            spark.read.parquet(f"{state_path}/sig")
-            .where(F.col("_batch_id") < before_batch)
-            .groupBy("band", "band_key")
-            .agg(F.min("nd_component").alias("nd_component"))
-        )
-    except AnalysisException:
-        sig = spark.createDataFrame(
-            [], "band int, band_key string, nd_component bigint"
-        )
-    return md5, sig
+    of deltas reproduces the sequential index exactly)."""
+    md5 = _prior_partials(
+        spark, f"{state_path}/md5", before_batch, "text_md5 string"
+    )
+    sig = _prior_partials(
+        spark, f"{state_path}/sig", before_batch,
+        "band int, band_key string, nd_component bigint",
+    )
+    return (
+        md5.select("text_md5").distinct(),
+        sig.groupBy("band", "band_key").agg(
+            F.min("nd_component").alias("nd_component")
+        ),
+    )
 
 
 def run_streaming_corpus_ingest_incremental(
@@ -183,10 +167,6 @@ def run_streaming_corpus_ingest_incremental(
     hash-exact with a batch ``clean_corpus`` over everything ingested
     through that batch, restricted to the batch's ids (see
     ``operators.corpus`` incremental notes)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_path)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         feats = corpus_features(
@@ -207,26 +187,14 @@ def run_streaming_corpus_ingest_incremental(
             num_hashes=num_hashes,
             bands=bands,
         )
-        for frame, path in (
-            (verdicts, verdicts_path),
-            (md5_delta, f"{state_path}/md5"),
-            (sig_delta, f"{state_path}/sig"),
-        ):
-            (
-                frame.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(path)
-            )
+        write_partial(verdicts, verdicts_path, batch_id)
+        write_partial(md5_delta, f"{state_path}/md5", batch_id)
+        write_partial(sig_delta, f"{state_path}/sig", batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    _ingest(
+        spark, input_path, checkpoint_path, schema, write_batch,
+        max_files_per_trigger, timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 def incremental_verdicts_from_ingest(
@@ -235,7 +203,7 @@ def incremental_verdicts_from_ingest(
     """Everything the incremental ingest has decided so far — a plain read
     (verdicts are final at ingest time), vs the full verdict recomputation
     ``corpus_verdicts_from_ingest`` performs."""
-    return spark.read.parquet(verdicts_path).drop("_batch_id")
+    return read_partials(spark, verdicts_path)
 
 
 def corpus_verdicts_from_ingest(
@@ -248,7 +216,7 @@ def corpus_verdicts_from_ingest(
     ingested so far — global dedup across every micro-batch, identical to a
     fresh ``clean_corpus`` over the union (band keys and text hashes are
     per-document values; see ``operators.corpus`` module docs)."""
-    feats = spark.read.parquet(features_path).drop("_batch_id")
+    feats = read_partials(spark, features_path)
     return verdicts_from_features(feats, id_col=id_col, **verdict_kw)
 
 
@@ -258,18 +226,12 @@ def _read_line_counts(
     """Merge-on-read recovery of the (line_key, n) count index from delta
     partitions with ``_batch_id < before_batch`` — the sum fold is
     associative, so any prefix of deltas reproduces the sequential index
-    exactly. Missing path means no prior state (first batch)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return (
-            spark.read.parquet(state_path)
-            .where(F.col("_batch_id") < before_batch)
-            .groupBy("line_key")
-            .agg(F.sum("n").alias("n"))
-        )
-    except AnalysisException:
-        return spark.createDataFrame([], "line_key bigint, n bigint")
+    exactly."""
+    return (
+        _prior_partials(spark, state_path, before_batch, "line_key bigint, n bigint")
+        .groupBy("line_key")
+        .agg(F.sum("n").alias("n"))
+    )
 
 
 def run_streaming_line_dedup(
@@ -310,11 +272,6 @@ def run_streaming_line_dedup(
         merge_line_count_indexes,
     )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-
     kw = dict(min_chars=min_chars, delimiter=delimiter, hash_fn=hash_fn)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -327,19 +284,10 @@ def run_streaming_line_dedup(
             batch_df, id_col, text_col, counts,
             max_occurrences=max_occurrences, **kw,
         )
-        for frame, path in ((deduped, output_path), (delta, state_path)):
-            (
-                frame.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(path)
-            )
+        write_partial(deduped, output_path, batch_id)
+        write_partial(delta, state_path, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    _ingest(
+        spark, input_path, checkpoint_path, schema, write_batch,
+        max_files_per_trigger, timeout_sec,
     )
-    q.awaitTermination(timeout_sec)

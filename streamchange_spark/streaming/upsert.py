@@ -3,7 +3,7 @@
 Streaming twin of ``SnapshotStore.merge_into`` for the re-crawl feed: each
 micro-batch of re-fetched pages is a MERGE source — matched keys rewrite
 only the files that contain them (copy-on-write), unmatched keys append as
-new files. Unlike the ingest twins (qsketch/kmv/heavy_hitters), nothing is
+new files. Unlike the tier ingests (streaming.partials), nothing is
 partitioned by ``_batch_id``: exactness under foreachBatch's at-least-once
 replay comes from MERGE being IDEMPOTENT — replaying a batch re-matches the
 rows it already upserted (its first play's inserts now match) and rewrites
@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.snapshots import SnapshotStore
+from .partials import _ingest
 
 __all__ = ["run_streaming_upsert"]
 
@@ -69,10 +70,6 @@ def run_streaming_upsert(
     ``maintain()`` compaction folds them into plain files."""
     key_cols = list(key_cols)
     store = SnapshotStore(store_dir)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_path)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         src = batch_df
@@ -118,10 +115,7 @@ def run_streaming_upsert(
             properties={"stream_batch_id": batch_id},
         )
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    _ingest(
+        spark, input_path, checkpoint_path, schema, write_batch,
+        max_files_per_trigger, timeout_sec,
     )
-    q.awaitTermination(timeout_sec)

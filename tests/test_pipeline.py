@@ -1248,7 +1248,7 @@ def test_purge_url_across_all_tiers_equals_rebuild(spark, tmp_path, pages):
         sketch_percentiles,
         sketch_rollup,
     )
-    from streamchange_spark.pipeline import purge_url
+    from streamchange_spark.pipeline import TIER_FAMILIES, purge_url
 
     store_dir = str(tmp_path / "purged")
     run_pipeline(spark, pages, store_dir)
@@ -1258,6 +1258,11 @@ def test_purge_url_across_all_tiers_equals_rebuild(spark, tmp_path, pages):
     ]
 
     report = purge_url(spark, store, victim, pages=pages)
+    # every registered family is purged: row-keyed ones by delete, the
+    # keyless KMV family by rebuild
+    assert set(report["families"]) | {"kmv1h/"} == {
+        fam.prefix for fam in TIER_FAMILIES
+    }
     assert report["families"]["tier1h/"]["deleted_rows"] > 0
     assert report["families"]["sig/"]["deleted_rows"] > 0
     assert report.get("kmv_rebuilt_days")
@@ -1268,9 +1273,7 @@ def test_purge_url_across_all_tiers_equals_rebuild(spark, tmp_path, pages):
     clean = SnapshotStore(clean_dir)
 
     # no family still answers for the url
-    for fam in (
-        "tier1h/", "gorilla1h/", "qsketch1h/", "stats1h/", "staterun/", "sig/"
-    ):
+    for fam in (f.prefix for f in TIER_FAMILIES if f.url_keyed):
         assert store.read(spark, prefix=fam).where(
             F.col("url") == victim
         ).count() == 0

@@ -6,7 +6,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from streamchange_spark.operators import merge_tier, rollup_raw
-from streamchange_spark.pipeline import refresh_pipeline, run_pipeline
+from streamchange_spark.pipeline import (
+    TIER_FAMILIES,
+    refresh_pipeline,
+    run_pipeline,
+)
 from streamchange_spark.sources import SnapshotStore, generate_pages
 
 TIER_COLS = [
@@ -24,16 +28,6 @@ def _split(pages, mod=5):
     """Deterministic ~1/mod late slice (no RNG — repeatable across runs)."""
     bucket = F.pmod(F.xxhash64("url", "warc_ts"), F.lit(mod))
     return pages.where(bucket != 0), pages.where(bucket == 0)
-
-
-def _tier_pdf(store_dir, spark):
-    return (
-        SnapshotStore(store_dir)
-        .read(spark, prefix="tier1h/")
-        .select(TIER_COLS)
-        .orderBy("url", "bucket_start")
-        .toPandas()
-    )
 
 
 def test_merge_tier_equals_direct(spark):
@@ -63,9 +57,96 @@ def test_merge_tier_equals_direct(spark):
     assert pm.equals(pd_)
 
 
+def _family_views(spark):
+    """Per registered tier family: (view of one store's committed family,
+    equality of two views). A family missing here fails the test below."""
+    import operator
+
+    import numpy as np
+
+    from streamchange_spark.operators import (
+        decompress_series,
+        state_tier_from_runs,
+        stats_eval,
+        stats_rollup,
+    )
+
+    def rows(df, *order):
+        return [tuple(r) for r in df.orderBy(*order).collect()]
+
+    def trend_close(a, b):
+        floats = [c for c in a.columns if a[c].dtype.kind == "f"]
+        return a.drop(columns=floats).equals(b.drop(columns=floats)) and all(
+            np.allclose(a[c], b[c], rtol=1e-6, atol=1e-9, equal_nan=True)
+            for c in floats
+        )
+
+    sig_cols = ["url", "warc_ts", "text_md5", "text_len", "mh_0"]
+    return {
+        # additive tier: bit-identical
+        "tier1h": (
+            lambda s: rows(
+                s.read(spark, prefix="tier1h/").select(TIER_COLS),
+                "url", "bucket_start",
+            ),
+            operator.eq,
+        ),
+        # re-compressed from the merged tier: same decoded series
+        "gorilla1h": (
+            lambda s: sorted(
+                (r["url"], r["bucket_start"], round(r["sum_v"], 6))
+                for r in decompress_series(
+                    s.read(spark, prefix="gorilla1h/"),
+                    ["url"], "bucket_start", "sum_v",
+                ).collect()
+            ),
+            operator.eq,
+        ),
+        # percentile sketches merge with a carried error bound (not
+        # bit-equal by design); the additive part must match exactly
+        "qsketch1h": (
+            lambda s: s.read(spark, prefix="qsketch1h/")
+            .agg(F.sum("n_points"))
+            .collect()[0][0],
+            operator.eq,
+        ),
+        # bottom-k is closed under union: BIT-identical arrays
+        "kmv1h": (
+            lambda s: rows(s.read(spark, prefix="kmv1h/"), "bucket_start"),
+            operator.eq,
+        ),
+        # regression moments: the evaluated 1d trend, within the
+        # stream == batch tolerance (the stores sum in different orders)
+        "stats1h": (
+            lambda s: stats_eval(
+                stats_rollup(s.read(spark, prefix="stats1h/"), ["url"], "1d")
+            )
+            .orderBy("url", "bucket_start")
+            .toPandas(),
+            trend_close,
+        ),
+        # obs-level runs make the union exact under arbitrary lateness: the
+        # stitched daily tier is bit-equal
+        "staterun": (
+            lambda s: sorted(
+                tuple(r)
+                for r in state_tier_from_runs(
+                    s.read(spark, prefix="staterun/"), ["url"], "1d"
+                ).collect()
+            ),
+            operator.eq,
+        ),
+        # signatures are per-row: the committed union is the full table
+        "sig": (
+            lambda s: rows(s.read(spark, prefix="sig/").select(sig_cols), *sig_cols),
+            operator.eq,
+        ),
+    }
+
+
 def test_refresh_equals_full_rebuild(spark, tmp_path, pages):
-    """Base build + late refresh produces the same committed 1h tier, KMV
-    arrays, and signature rows as a from-scratch build over base UNION late."""
+    """Base build + late refresh leaves every registered tier family equal
+    to a from-scratch build over base UNION late."""
     base, late = _split(pages)
     assert late.count() > 0 and base.count() > 0
 
@@ -79,56 +160,12 @@ def test_refresh_equals_full_rebuild(spark, tmp_path, pages):
     full_dir = str(tmp_path / "full")
     run_pipeline(spark, pages, full_dir)
 
-    assert _tier_pdf(inc_dir, spark).equals(_tier_pdf(full_dir, spark))
-
-    # KMV bottom-k is closed under union -> merged arrays are BIT-identical
-    # to the direct build's.
-    kmv_inc = (
-        SnapshotStore(inc_dir).read(spark, prefix="kmv1h/")
-        .orderBy("bucket_start").toPandas()
-    )
-    kmv_full = (
-        SnapshotStore(full_dir).read(spark, prefix="kmv1h/")
-        .orderBy("bucket_start").toPandas()
-    )
-    assert list(kmv_inc["n_points"]) == list(kmv_full["n_points"])
-    assert [list(a) for a in kmv_inc["kmv"]] == [list(a) for a in kmv_full["kmv"]]
-
-    # Signatures are per-row: committed union equals the full build's table.
-    sig_cols = ["url", "warc_ts", "text_md5", "text_len", "mh_0"]
-    sig_inc = (
-        SnapshotStore(inc_dir).read(spark, prefix="sig/")
-        .select(sig_cols).orderBy(sig_cols).toPandas()
-    )
-    sig_full = (
-        SnapshotStore(full_dir).read(spark, prefix="sig/")
-        .select(sig_cols).orderBy(sig_cols).toPandas()
-    )
-    assert sig_inc.equals(sig_full)
-
-    # Time-in-state: the stitched daily tier over the refreshed run rows
-    # bit-equals the full build's (obs-level runs make the union exact
-    # under arbitrary lateness — the family's refresh contract).
-    from streamchange_spark.operators import state_tier_from_runs
-
-    lang_state = lambda d: sorted(
-        tuple(r) for r in state_tier_from_runs(
-            SnapshotStore(d).read(spark, prefix="staterun/"), ["url"], "1d"
-        ).collect()
-    )
-    assert lang_state(inc_dir) == lang_state(full_dir)
-
-    # Percentile sketches merge with a carried error bound (not bit-equal by
-    # design); the additive part must still match exactly.
-    n_inc = (
-        SnapshotStore(inc_dir).read(spark, prefix="qsketch1h/")
-        .agg(F.sum("n_points")).collect()[0][0]
-    )
-    n_full = (
-        SnapshotStore(full_dir).read(spark, prefix="qsketch1h/")
-        .agg(F.sum("n_points")).collect()[0][0]
-    )
-    assert n_inc == n_full
+    views = _family_views(spark)
+    assert set(views) == {fam.name for fam in TIER_FAMILIES}
+    inc, full = SnapshotStore(inc_dir), SnapshotStore(full_dir)
+    for fam in TIER_FAMILIES:
+        view, same = views[fam.name]
+        assert same(view(inc), view(full)), fam.name
 
 
 def test_refresh_touches_only_invalidated_partitions(spark, tmp_path, pages):

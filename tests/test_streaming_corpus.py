@@ -274,6 +274,33 @@ def test_streaming_kmv_tier_bit_equals_batch(spark, tmp_path):
         assert abs(approx - x) / x < 4 * rse if x >= k else approx == float(x)
 
 
+def test_streaming_ingest_timeout_raises_and_stops_query(spark, tmp_path):
+    """An ingest still running at ``timeout_sec`` must not return as if done:
+    it stops its query (no orphan keeps writing the partials a caller is
+    about to read) and raises TimeoutError naming the input."""
+    from streamchange_spark.streaming import run_streaming_kmv_ingest
+
+    src = tmp_path / "slow_events"
+    src.mkdir()
+    for dump in range(2):
+        pd.DataFrame(
+            {
+                "key": ["a", "b"],
+                "ts": pd.to_datetime([dump * 3600, dump * 3600 + 60], unit="s"),
+                "uid": [dump, dump + 1],
+            }
+        ).to_parquet(src / f"dump{dump}.parquet", coerce_timestamps="us")
+
+    with pytest.raises(TimeoutError, match="slow_events"):
+        run_streaming_kmv_ingest(
+            spark, str(src), str(tmp_path / "kmv"), str(tmp_path / "ckpt"),
+            "key string, ts timestamp, uid bigint",
+            ["key"], "ts", "uid",
+            max_files_per_trigger=1, timeout_sec=0.001,
+        )
+    assert spark.streams.active == []
+
+
 def test_streaming_hh_tier_invariant_over_ingest(spark, tmp_path):
     """Two dumps streamed into partial heavy-hitter summaries, merged into
     a queryable 1d tier: the carried err reflects the stream's merge tree
